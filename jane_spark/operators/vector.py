@@ -420,7 +420,9 @@ def _assign_lists(
     norms = np.sqrt((centroids * centroids).sum(axis=1))
     norms[norms == 0.0] = 1.0
     bc = spark.sparkContext.broadcast((centroids, norms))
-    out_schema = f"{id_col} long, {vec_col} array<float>, list_id int"
+    # the vector passes through at its input type: no float32 narrowing
+    vec_type = vectors.schema[vec_col].dataType.simpleString()
+    out_schema = f"{id_col} long, {vec_col} {vec_type}, list_id int"
     if with_rank:
         out_schema += ", probe_rank int"
 

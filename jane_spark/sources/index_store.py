@@ -16,12 +16,27 @@ DocumentIndex, conf=H; SURVEY.md §0 caveat]. Spark-native layout:
 At 100 TB the partition key is the contract: queries that carry the
 key prune to a file subset before any I/O; everything else relies on
 row-group min/max skipping over the sorted layout.
+
+Read contract. Every ``documents()`` / ``index()`` call is a fresh
+read, but Parquet schema inference (one Spark job per open) runs only
+on a store's first read of each table:
+
+- the schema is resolved once per store and reused by later reads;
+- the store's own writes (``write_documents``, ``write_index``,
+  ``upsert_index_for_documents``) drop it, so the next read re-infers;
+- the file listing and partition discovery are fresh on every read, so
+  files another process adds (or removes) are visible to the next read;
+- a schema changed by another process (a new column) is picked up only
+  by a new ``IndexStore``.
+
+Only the ``StructType`` is kept: no DataFrame, plan or data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from jane_spark.operators.topk import argmax
 
@@ -32,7 +47,21 @@ class IndexStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        self._schemas: dict[str, StructType] = {}
+
+    def _read(self, path: str) -> DataFrame:
+        """Read ``path`` with its known schema; infer it on first use."""
+        known = self._schemas.get(path)
+        if known is not None:
+            return self.spark.read.schema(known).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[path] = df.schema
+        return df
+
+    def _writing(self, path: str) -> str:
+        """Forget ``path``'s schema before the store writes to it."""
+        self._schemas.pop(path, None)
+        return path
 
     # ---------------------------------------------------------- documents
 
@@ -46,11 +75,11 @@ class IndexStore:
         (
             enriched.write.partitionBy("doc_type")
             .mode(mode)
-            .parquet(f"{self.root}/documents")
+            .parquet(self._writing(f"{self.root}/documents"))
         )
 
     def documents(self, doc_type: str | None = None) -> DataFrame:
-        df = self.spark.read.parquet(f"{self.root}/documents")
+        df = self._read(f"{self.root}/documents")
         if doc_type is not None:
             df = df.filter(F.col("doc_type") == doc_type)  # partition-pruned
         return df
@@ -83,7 +112,7 @@ class IndexStore:
         (
             rows.write.partitionBy(*partition_cols)
             .mode(mode)
-            .parquet(f"{self.root}/index/{doc_type}")
+            .parquet(self._writing(f"{self.root}/index/{doc_type}"))
         )
 
     def upsert_index_for_documents(
@@ -94,12 +123,15 @@ class IndexStore:
     ) -> None:
         """I7: replace all index rows belonging to the documents present
         in ``rows`` (delete-old + insert-new per source document), via
-        dynamic partition overwrite on the doc-id partition."""
+        dynamic partition overwrite on the doc-id partition. The mode is
+        set on this writer, not the session, so no other query's conf
+        can turn the upsert into a whole-table overwrite."""
         (
             rows.write.partitionBy(doc_id_col)
             .mode("overwrite")
-            .parquet(f"{self.root}/index/{doc_type}")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(self._writing(f"{self.root}/index/{doc_type}"))
         )
 
     def index(self, doc_type: str) -> DataFrame:
-        return self.spark.read.parquet(f"{self.root}/index/{doc_type}")
+        return self._read(f"{self.root}/index/{doc_type}")

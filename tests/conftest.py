@@ -40,8 +40,9 @@ def duck(sf_dir):
 
 
 # ---------------------------------------------------------------------
-# Test tiering (VERDICT r15 #1; see pytest.ini). Node-id fragments of
-# the multi-minute Spark-fixture tests, selected from a full
+# Test tiering (VERDICT r15 #1; see pytest.ini). Test names, or exact
+# parametrized ids such as `test_oracle_parity[q_k23_ivf_pq]`, of the
+# multi-minute Spark-fixture tests, selected from a full
 # `--durations=0` run (2026-08-18, idle box, 829 passed / 1960 s):
 # everything here is >=5 s and its operator FAMILY keeps at least one
 # default-path test — usually the driver-facing oracle-parity row
@@ -49,7 +50,7 @@ def duck(sf_dir):
 # q_k48 nn_descent, q_i11 stream join, q_k26 unigram_train,
 # q_i7 upsert, q_k16 dbscan, q_k27 pagerank, q_i5 late clones).
 # The full suite (including these) runs with `-m ""`.
-SLOW_NODE_FRAGMENTS = (
+SLOW_TESTS = (
     "test_label_propagation_incr_laws",
     "test_no_python_eval_outside_allowlist",
     "test_oracle_parity[q_k52_lpa_incr]",
@@ -141,6 +142,8 @@ SLOW_NODE_FRAGMENTS = (
 
 
 def pytest_collection_modifyitems(config, items):
+    # exact match: a bare name covers every parameter set of that test,
+    # a bracketed id only itself; a longer name never matches a shorter one
     for item in items:
-        if any(f in item.nodeid for f in SLOW_NODE_FRAGMENTS):
+        if item.name in SLOW_TESTS or item.originalname in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

@@ -61,6 +61,104 @@ def test_index_upsert_replaces_per_document(spark, store):
     assert got == {("d1", 9.0), ("d2", 3.0)}
 
 
+def test_upsert_ignores_static_session_overwrite_mode(spark, store):
+    """The upsert's dynamic partition overwrite is set on its own
+    writer: a session conf reset to ``static`` after the store is built
+    must not turn it into a whole-table overwrite."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    rows = spark.createDataFrame(
+        [("d1", 1.0), ("d2", 2.0), ("d3", 3.0)], ["doc_id", "val"]
+    )
+    store.upsert_index_for_documents("doc", rows)
+    spark.conf.set(key, "static")
+    try:
+        store.upsert_index_for_documents(
+            "doc", spark.createDataFrame([("d2", 9.0)], ["doc_id", "val"])
+        )
+    finally:
+        spark.conf.set(key, before)
+    got = {(r["doc_id"], r["val"]) for r in store.index("doc").collect()}
+    assert got == {("d1", 1.0), ("d2", 9.0), ("d3", 3.0)}
+
+
+def _read_jobs(spark, read, group):
+    """Job ids launched while ``read()`` opens a table (no action)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_index_reopen_launches_no_schema_job(spark, store):
+    """Only a store's first open of a table infers the Parquet schema
+    (one Spark job); every later open reuses it and launches none."""
+    rows = spark.createDataFrame(
+        [("BW", "ALTM", 1.0), ("GR", "FUR", 2.0)], ["network", "station", "val"]
+    )
+    store.write_index("trace", rows, partition_cols=["network"])
+    assert _read_jobs(spark, lambda: store.index("trace"), "index_open_first")
+    assert _read_jobs(spark, lambda: store.index("trace"), "index_open_again") == []
+    store.write_documents(spark.createDataFrame(
+        [("d1", "quakeml", "a.xml", "text/xml", b"<q/>", _t("2023-01-01T00:00:00"), 1)],
+        DOC_COLS,
+    ))
+    store.documents()
+    assert _read_jobs(spark, lambda: store.documents("quakeml"), "docs_open_again") == []
+
+
+def test_index_reads_see_the_stores_own_writes(spark, store):
+    """Each of the store's writes drops the table's known schema: an
+    appended partition, an upsert and an overwrite that adds a column
+    all show up in the next read, rows and schema."""
+    t = "trace"
+    store.write_index(t, spark.createDataFrame([("BW", 1.0)], ["network", "val"]), ["network"])
+    assert store.index(t).count() == 1
+    store.write_index(t, spark.createDataFrame([("GR", 2.0)], ["network", "val"]), ["network"])
+    assert {(r["network"], r["val"]) for r in store.index(t).collect()} == {
+        ("BW", 1.0), ("GR", 2.0)
+    }
+
+    store.upsert_index_for_documents(
+        "doc", spark.createDataFrame([("d1", 1.0), ("d2", 2.0)], ["doc_id", "val"])
+    )
+    assert store.index("doc").count() == 2
+    store.upsert_index_for_documents(
+        "doc", spark.createDataFrame([("d3", 3.0)], ["doc_id", "val"])
+    )
+    assert {r["doc_id"] for r in store.index("doc").collect()} == {"d1", "d2", "d3"}
+
+    wider = spark.createDataFrame([("NZ", 5.0, "x")], ["network", "val", "extra"])
+    store.write_index(t, wider, ["network"], mode="overwrite")
+    back = store.index(t)
+    assert "extra" in back.columns
+    assert [tuple(r) for r in back.select("network", "val", "extra").collect()] == [
+        ("NZ", 5.0, "x")
+    ]
+
+
+def test_index_reads_see_files_written_outside_the_store(spark, store):
+    """Only the schema is reused: the file listing is fresh on every
+    read, so Parquet files another writer appends to the table
+    directory show up in the next ``index()``."""
+    store.write_index(
+        "trace", spark.createDataFrame([("BW", 1.0)], ["network", "val"]), ["network"]
+    )
+    assert store.index("trace").count() == 1
+    spark.createDataFrame([("GR", 2.0)], ["network", "val"]).write.partitionBy(
+        "network"
+    ).mode("append").parquet(f"{store.root}/index/trace")
+    spark.createDataFrame([(3.0,)], ["val"]).write.mode("append").parquet(
+        f"{store.root}/index/trace/network=NZ"
+    )
+    assert {(r["network"], r["val"]) for r in store.index("trace").collect()} == {
+        ("BW", 1.0), ("GR", 2.0), ("NZ", 3.0)
+    }
+
+
 def test_fs_delta_and_deletions(spark):
     before, after = fs_snapshots(spark)
     changed = {r["path"] for r in delta_files(after, before).collect()}

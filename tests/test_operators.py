@@ -485,6 +485,37 @@ def test_ivf_pq_residual_recall_ladder(spark, sf_dir):
         ivf_pq_residual_topk(emb, "vec_id", "embedding", dim=64, m=5)
 
 
+def test_ivf_pq_residual_double_vectors_match_oracle(spark, sf_dir, tmp_path):
+    """An ``array<double>`` vector column keeps its precision through
+    the list assignment: the residual IVF-PQ result over doubles that
+    float32 cannot represent (the fixture scaled by 1000) equals the
+    q_k23_ivf_pq_residual oracle run over the same doubles."""
+    import duckdb
+
+    from jane_spark.contracts.registry import REGISTRY
+    from jane_spark.operators.vector import ivf_pq_residual_topk
+    from tests.oracle_compare import compare
+
+    path = str(tmp_path / "embeddings.parquet")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double") * 1000.0).alias("embedding"),
+    ).write.parquet(path)
+    emb = spark.read.parquet(path)
+    assert emb.schema["embedding"].dataType.simpleString() == "array<double>"
+    got = ivf_pq_residual_topk(
+        emb, "vec_id", "embedding", dim=64, n_lists=8, n_probe=3,
+        lloyd_iters=5, m=4, k=4, pq_iters=2, k_top=5,
+    ).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    want = con.execute(REGISTRY["q_k23_ivf_pq_residual"].oracle).fetchdf()
+    con.close()
+    problems = compare(got, want)
+    assert not problems, problems
+    assert len(got) > 0
+
+
 def test_ivf_pq_all_probes_degrades_to_brute_adc(spark, sf_dir):
     """Composed IVF-PQ semantic pin: probing every inverted list must
     make the list-pruning a no-op — the result equals brute-force ADC
@@ -2573,6 +2604,21 @@ def test_bloom_prefilter_anti_join_exact_and_selective(spark, sf_dir):
         bin(w & ((1 << 64) - 1)).count("1") for w in bm_sat
     ) / (64 * len(bm_sat))
     assert sat_fill == 1.0
+
+
+def test_bloom_zero_hashes_rejected(spark):
+    """``n_hashes=0`` would build a filter that rejects nothing; both
+    entry points refuse it instead of returning a filter-free result."""
+    from jane_spark.operators.dedup import (
+        bloom_bitmap,
+        bloom_prefilter_anti_join,
+    )
+
+    keys = spark.createDataFrame([("a",), ("b",)], ["fp"])
+    with pytest.raises(ValueError, match="n_hashes"):
+        bloom_bitmap(keys, "fp", n_hashes=0)
+    with pytest.raises(ValueError, match="n_hashes"):
+        bloom_prefilter_anti_join(keys, keys, "fp", n_hashes=0)
 
 
 # ------------------------------------------- portable cardinality sketches
